@@ -4,7 +4,7 @@ Mirrors the *semantics* of the reference connector's config surface
 (``As400ConnectorConfig.java`` — buffer size, max entries per fetch,
 poll interval, include lists, snapshot modes) re-expressed as the
 knobs a Spark engine actually needs: per-trigger entry budget, key
-bucket count, salt factor, checkpoint/target paths.
+bucket count, merge write mode, checkpoint/target paths.
 """
 
 from __future__ import annotations
@@ -26,8 +26,11 @@ class EngineConfig:
       "rewrite" keeps it with ``__deleted=true``.
     - ``num_buckets`` — target-table key-hash bucket count; the Spark
       analogue of partitioning the journal/target for pruned merges.
-    - ``salt_buckets`` — skew salting factor for hot MERGE keys
-      (north rule: explicit skew handling).
+
+    Every batch takes one path: filter, fold to the last write per key
+    by ``(receiver_idx, seq)`` with a ``max_by`` hash aggregation
+    (partial map-side combine, so a hot key collapses before the
+    shuffle), decode the survivors, MERGE behind the position fence.
     """
 
     journal_path: str = ""
@@ -48,7 +51,6 @@ class EngineConfig:
 
     # target layout / merge strategy
     num_buckets: int = 32
-    salt_buckets: int = 8
     delete_mode: str = "drop"  # or "rewrite"
     # merge write strategy (Iceberg write.merge.mode analogue):
     #  "cow" copy-on-write: each merge reads+rewrites touched buckets
@@ -56,28 +58,14 @@ class EngineConfig:
     #        (one Spark job per batch, no current-state read); readers
     #        resolve by position, compact() folds deltas into a base
     merge_write_mode: str = "cow"
-    # mor housekeeping: auto-compact after this many merged batches
-    # (0 = never). Batch cadence is a blunt instrument — batches vary
-    # in size and bucket spread; prefer mor_compact_max_deltas, which
-    # triggers on the quantity that actually bounds read
-    # amplification. Ignored in cow mode.
-    mor_compact_every: int = 0
-    # mor housekeeping (round-6, VERDICT r5 #4): compact when any
-    # bucket's OUTSTANDING DELTA COUNT reaches this threshold (0 =
-    # never). Read cost grows linearly with per-bucket delta depth
-    # (see BASELINE.md read-amplification table: ~+12%/delta at
-    # sf-bench shape), so this caps read() wall directly regardless
-    # of batch sizing. Free to evaluate: the depth rides the commit's
-    # deltas map, no extra IO. Both triggers may be set; either fires.
+    # mor housekeeping: compact when any bucket's OUTSTANDING DELTA
+    # COUNT reaches this threshold (0 = never). Read cost grows
+    # linearly with per-bucket delta depth (see BASELINE.md
+    # read-amplification table: ~+12%/delta at sf-bench shape), so
+    # this caps read() wall directly regardless of batch sizing. Free
+    # to evaluate: the depth rides the commit's deltas map, no extra
+    # IO. Ignored in cow mode.
     mor_compact_max_deltas: int = 0
-    # state-path compaction strategy:
-    #  "fused"  (default) max_by hash aggregation — partial map-side
-    #           combine (shuffle O(keys x map_tasks), no sort,
-    #           inherently skew-proof)
-    #  "window" single window pass (sorts events; useful when the
-    #           winner's neighbors are also needed)
-    #  "salted" two-phase salted window (legacy skew handling)
-    compaction_mode: str = "fused"
 
     # Debezium ``snapshot.mode`` analogue (reference config surface:
     # As400ConnectorConfig snapshot modes; semantics = Debezium core):

@@ -4,8 +4,9 @@ compacted current state.
 This is the Spark re-expression of the reference's hot path
 (``As400StreamingChangeEventSource.execute`` -> decode -> dispatch,
 SURVEY.md §3.2): declarative filters (pushed to the scan), a
-codegen'd op-type map, window-based UB/UP pairing, ONE vectorized
-decode UDF, and a skew-salted last-per-key compaction.
+codegen'd op-type map, window-based UB/UP pairing (event consumers
+only), a ``max_by`` last-per-key hash aggregation, and ONE vectorized
+decode UDF over the survivors.
 
 Plan-shape invariants (checked in tests via ``.explain``):
 - table/code/type filters appear in ``PushedFilters`` of the scan;
@@ -24,9 +25,7 @@ from pyspark.sql import functions as F
 from debezium_connector_ibmi_spark.config import EngineConfig
 from debezium_connector_ibmi_spark.functions.decode import extract_text_udf
 from debezium_connector_ibmi_spark.functions.optype import op_type_col
-from debezium_connector_ibmi_spark.operators.compaction import (
-    salted_last_event_per_key,
-)
+from debezium_connector_ibmi_spark.operators.compaction import last_event_per_key
 from debezium_connector_ibmi_spark.operators.filters import apply_standard_filters
 from debezium_connector_ibmi_spark.operators.pairing import pair_before_after
 
@@ -52,22 +51,22 @@ def with_text(events: DataFrame) -> DataFrame:
 
 
 def compact_batch(events: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Last-writer-wins per key over a (micro-)batch, skew-salted."""
-    return salted_last_event_per_key(events, cfg.key_column, cfg.salt_buckets)
+    """Last-writer-wins per key over a (micro-)batch of paired events."""
+    return last_event_per_key(events, cfg.key_column)
 
 
 def pair_and_compact(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Fused UB/UP pairing + last-per-key compaction in ONE window
-    pass (one shuffle of the event payloads, vs three for
-    pair -> salt-compact -> compact).
+    pass (one shuffle of the event payloads, vs two for
+    pair -> compact), for consumers that need before-images (the
+    envelope/event path; the MERGE path uses ``compact_for_state``).
 
     Single window over (table_name, url) ordered by (receiver_idx,
     seq): ``lag`` recovers the before-image for updates;
     ``max(position) over unbounded`` marks the last *data* event per
     key; the filter keeps exactly that row. Skew note: a pathological
-    hot key serializes inside one window partition — for that regime
-    use compaction_mode="salted" (EngineConfig), which trades two
-    extra shuffles for hot-key splitting.
+    hot key serializes inside one window partition; the state path's
+    ``max_by`` aggregation does not have this limit.
     """
     from pyspark.sql import Window
 
@@ -105,7 +104,13 @@ def compact_for_state(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
     BEFORE the shuffle and the ``before_html``/``null_mask`` columns
     never leave the scan — roughly halving shuffled bytes vs the
     pairing-aware path (the biggest single cost at 2KB+ payloads).
-    One window pass, one shuffle, or the two-phase salted variant.
+
+    The fold is a ``max_by`` hash aggregation, not a window: each map
+    task ships at most one candidate row per key (partial map-side
+    combine), so shuffle volume is O(keys x map_tasks) instead of
+    O(events) and nothing is sorted. ``max_by`` is deterministic
+    because (receiver_idx, seq) is unique per entry, and a hot key's
+    events collapse map-side before they can pile onto one reducer.
     """
     f = apply_standard_filters(journal_slice, cfg)
     f = f.withColumn("op", op_type_col())
@@ -119,32 +124,6 @@ def compact_for_state(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
         "warc_ts",
         "lang",
     )
-    if cfg.compaction_mode == "salted":
-        return salted_last_event_per_key(data, cfg.key_column, cfg.salt_buckets)
-    if cfg.compaction_mode == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("table_name", cfg.key_column)
-        pos = F.struct(F.col("receiver_idx"), F.col("seq"))
-        last_pos = F.max(pos).over(
-            w.orderBy("receiver_idx", "seq").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        return (
-            data.withColumn("__last", pos == last_pos)
-            .filter(F.col("__last"))
-            .drop("__last")
-        )
-    # default "fused"/"agg": max_by hash aggregation. Unlike the
-    # window (full sort of every event, all payload bytes shuffled),
-    # a hash agg does PARTIAL map-side combine — each map task ships
-    # at most one candidate row per key, so shuffle volume drops from
-    # O(events) to O(keys x map_tasks) and no sort happens at all.
-    # max_by is deterministic here because (receiver_idx, seq) is
-    # unique per entry. This is also inherently skew-proof: a hot
-    # key's events collapse map-side before they can pile onto one
-    # reducer (the salted mode remains for the window variants).
     pos = F.struct(F.col("receiver_idx"), F.col("seq"))
     payload = F.struct(
         "receiver_idx", "seq", "op", "html", "warc_ts", "lang"

@@ -51,53 +51,26 @@ from debezium_connector_ibmi_spark.sources.journal_source import read_journal
 # reverts from Observation conditional aggregates to its own job
 LINEAGE_OBSERVE_MAX_RECEIVERS = 64
 
-# compute the cow sink's touched-bucket set with a NARROW pre-pass
-# over the raw slice (key column only — payload columns never read)
-# instead of persisting the decoded batch and riding discovery on its
-# cache-fill action. DEFAULT False: measured round 7 (A/B, 3
-# interleaved rounds on the 4M-op bench journal, local[32]) the
-# persist+fill shape is both faster and far more stable —
-# persist+fill 8.2-10.8s total with every batch 1.9-3.3s, narrow
-# 11.2-32.9s with bimodal batches (2.2-3.3s normally, 8-12s GC/stall
-# spikes when the scan+decode+merge+write pipeline runs as one long
-# action). The theory for narrow (bucket set of the compacted batch
-# == bucket set of the filtered slice's raw keys, so a key-only scan
-# suffices and the decode pipeline executes exactly once, nothing
-# persisted) is sound, but one fused action serializes the Python
-# decode stage with the state read + window + bucket write inside a
-# single scheduling wave, and the measured tail is worse than the
-# cache-fill shape's extra materialization. Kept as a flag so the
-# A/B stays reproducible (tests/test_plan_shape.py pins result
-# equivalence of both shapes).
-TOUCHED_BUCKETS_NARROW = False
-
-
-def _mor_compact_due(cfg, target, n_done: int, stats: dict) -> bool:
-    """Shared mor-compaction trigger (tailer loop + structured
+def _mor_compact_due(cfg, target, stats: dict) -> bool:
+    """Shared mor-compaction trigger (tailer loop, fan-out, structured
     stream): fire when any bucket's outstanding delta count reached
-    ``mor_compact_max_deltas`` (the quantity that actually bounds read
-    amplification — rides the commit's deltas map for free), or on the
-    ``mor_compact_every`` batch cadence as the blunt fallback."""
-    if getattr(target, "write_mode", "cow") != "mor":
-        return False
-    if (
-        cfg.mor_compact_max_deltas > 0
+    ``mor_compact_max_deltas`` — the quantity that actually bounds read
+    amplification, riding the commit's deltas map for free."""
+    return (
+        getattr(target, "write_mode", "cow") == "mor"
+        and cfg.mor_compact_max_deltas > 0
         and stats.get("max_bucket_deltas", 0) >= cfg.mor_compact_max_deltas
-    ):
-        return True
-    return cfg.mor_compact_every > 0 and n_done % cfg.mor_compact_every == 0
+    )
 
 
 def _fill_cache_collect_touched(batch, target) -> list[int] | None:
     """Materialize a persisted cow batch (noop write) and ride the
     touched-bucket discovery on it as a map-side ``collect_set``
-    Observation — the default cow shape (one cache-fill action + one
-    merge-from-cache action per batch; see the
-    ``TOUCHED_BUCKETS_NARROW`` A/B note for why this beats the
-    single-action narrow-discovery variant). Driver state is bounded:
-    the set size is <= target.num_buckets. Returns None (sink falls
-    back to its own discovery) for custom targets or when the
-    metrics row is unavailable."""
+    Observation — one cache-fill action + one merge-from-cache action
+    per batch. Driver state is bounded: the set size is <=
+    target.num_buckets. Returns None (sink falls back to its own
+    discovery) for custom targets or when the metrics row is
+    unavailable."""
     if not (hasattr(target, "_bucket_col") and hasattr(target, "key")):
         return None  # custom target: let it do its own discovery
     from pyspark.sql import Observation
@@ -113,30 +86,6 @@ def _fill_cache_collect_touched(batch, target) -> list[int] | None:
     if m is None:
         return None
     return [int(b) for b in m["touched"]]
-
-
-def _touched_buckets_narrow(sliced, cfg, target) -> list[int] | None:
-    """Touched-bucket set from a key-column-only pass over the raw
-    slice (see the ``TOUCHED_BUCKETS_NARROW`` note): the compacted
-    batch's key set equals the filtered slice's key set, so the
-    discovery scan reads ONLY the key column (predicates stay pushed,
-    payload columns never leave the parquet footer stats) and the
-    distinct collapses map-side to <= num_buckets values per task.
-    Returns None for custom targets (sink does its own discovery)."""
-    if not (hasattr(target, "_bucket_col") and hasattr(target, "key")):
-        return None
-    from debezium_connector_ibmi_spark.functions.optype import op_type_col
-    from debezium_connector_ibmi_spark.operators.filters import (
-        apply_standard_filters,
-    )
-
-    keys = (
-        apply_standard_filters(sliced, cfg)
-        .where(op_type_col().isin("c", "u", "d"))
-        .select(target._bucket_col(F.col(target.key)).alias("b"))
-        .distinct()
-    )
-    return sorted(int(r["b"]) for r in keys.collect())
 
 
 def _observation_metrics(obs, timeout_s: float = 2.0) -> dict | None:
@@ -180,16 +129,39 @@ def _merge_columns() -> list[str]:
 def prepare_batch(journal_slice: DataFrame, cfg: EngineConfig) -> DataFrame:
     """filter -> op-map -> compact -> decode survivors.
 
-    Uses the state-path compaction (UB rows and before-image bytes
-    dropped BEFORE the shuffle — final state never reads them;
-    envelope/event consumers use pipeline.pair_and_compact /
-    decoded_events instead). compaction_mode="fused" = one window
-    pass; "salted" = two-phase skew-safe.
+    Uses the state-path compaction, a ``max_by`` hash aggregation
+    (UB rows and before-image bytes dropped BEFORE the shuffle — final
+    state never reads them; envelope/event consumers use
+    pipeline.pair_and_compact / decoded_events instead).
     """
     from debezium_connector_ibmi_spark.pipeline import compact_for_state
 
     last = compact_for_state(journal_slice, cfg)
     return with_text(last).select(*_merge_columns())
+
+
+def merge_batch(
+    source: DataFrame, cfg: EngineConfig, target, **merge_kwargs
+) -> dict:
+    """prepare -> merge one slice of journal rows into ``target``.
+
+    cow: the merge needs the touched-bucket set at PLAN time, so the
+    prepared batch is persisted and discovery rides its cache-fill
+    action; the merge then reads from the cache. The mor sink's write
+    IS its only action — no discovery needed (touched = written
+    partition dirs), caching pure overhead. The persisted batch is
+    released even when the merge raises."""
+    batch = prepare_batch(source, cfg)
+    if getattr(target, "write_mode", "cow") != "cow":
+        return target.merge(batch, **merge_kwargs)
+    batch = batch.persist()
+    try:
+        touched = _fill_cache_collect_touched(batch, target)
+        if touched is not None:
+            merge_kwargs["touched"] = touched
+        return target.merge(batch, **merge_kwargs)
+    finally:
+        batch.unpersist()
 
 
 def apply_schema_changes_for_slice(
@@ -246,6 +218,37 @@ def apply_schema_changes_for_slice(
     return apply_schema_events(target, evolution, versions)
 
 
+def open_journal(spark: SparkSession, cfg: EngineConfig) -> DataFrame:
+    """Journal scan in the configured layout. Binary = packed header
+    blobs decoded in-pipeline (C1/C2); receiver_idx partition pruning
+    still reaches the scan, seq range predicates apply post-decode."""
+    if cfg.journal_format == "binary":
+        from debezium_connector_ibmi_spark.sources.journal_source import (
+            read_binary_journal,
+        )
+
+        return read_binary_journal(spark, cfg.journal_path)
+    return read_journal(spark, cfg.journal_path)
+
+
+def discover_chain(
+    spark: SparkSession, cfg: EngineConfig
+) -> tuple[DataFrame, list[dict]]:
+    """The journal scan plus its usable receiver chain.
+
+    Chain discovery reads the parquet footers (metadata-only, the
+    Iceberg-manifest analogue) when the layout allows, else falls back
+    to a 2-column scan. The footers are read BEFORE the scan lists its
+    files: a receiver published in between is then listed but not yet
+    in the chain, so the planner never plans past what the scan can
+    see. (Listing first lets such a receiver into the chain but not the
+    scan — its range is planned, nothing is read, and the watermark
+    passes it.)"""
+    footers = receiver_lineage_from_footers(cfg.journal_path)
+    journal = open_journal(spark, cfg)
+    return journal, usable_chain(footers or receiver_lineage(journal))
+
+
 def _require_single_table(cfg: EngineConfig) -> None:
     """The sink's state is keyed by ``cfg.key_column`` alone (the
     reference keeps one topic/table per source table); two tables
@@ -282,19 +285,6 @@ class JournalTailer:
             delete_mode=cfg.delete_mode,
             write_mode=cfg.merge_write_mode,
         )
-
-    def _read_journal(self) -> DataFrame:
-        """Journal scan in the configured layout. Binary = packed
-        header blobs decoded in-pipeline (C1/C2); receiver_idx
-        partition pruning still reaches the scan, seq range predicates
-        apply post-decode."""
-        if self.cfg.journal_format == "binary":
-            from debezium_connector_ibmi_spark.sources.journal_source import (
-                read_binary_journal,
-            )
-
-            return read_binary_journal(self.spark, self.cfg.journal_path)
-        return read_journal(self.spark, self.cfg.journal_path)
 
     def _apply_schema_changes(self, sliced: DataFrame) -> list[int]:
         return apply_schema_changes_for_slice(
@@ -427,35 +417,14 @@ class JournalTailer:
                 import shutil
 
                 shutil.rmtree(qpath, ignore_errors=True)
-        # cow: the merge needs the touched-bucket set at PLAN time.
-        # Default shape: persist the batch, ride discovery on the
-        # cache-fill action (measured fastest + most stable — see the
-        # TOUCHED_BUCKETS_NARROW note for the single-action A/B). The
-        # mor sink's write IS its only action — no discovery needed
-        # (touched = written partition dirs), caching pure overhead.
-        batch = prepare_batch(sliced_obs, self.cfg)
-        cache = (
-            getattr(self.target, "write_mode", "cow") == "cow"
-            and not TOUCHED_BUCKETS_NARROW
-        )
-        touched = None
-        if TOUCHED_BUCKETS_NARROW and (
-            getattr(self.target, "write_mode", "cow") == "cow"
-        ):
-            touched = _touched_buckets_narrow(sliced, self.cfg, self.target)
-        elif cache:
-            batch = batch.persist()
-            touched = _fill_cache_collect_touched(batch, self.target)
-        merge_kwargs = {} if touched is None else {"touched": touched}
-        stats = self.target.merge(
-            batch,
+        stats = merge_batch(
+            sliced_obs,
+            self.cfg,
+            self.target,
             batch_id=batch_id,
             watermark=(rng.end.receiver_idx, rng.end.seq),
             partitions=lineage,  # callable: resolved after the write
-            **merge_kwargs,
         )
-        if cache:
-            batch.unpersist()
         if stats.get("skipped"):
             # fenced replay: nothing was applied (the cache-fill action
             # may have fired the observation, but the counts describe
@@ -537,15 +506,7 @@ class JournalTailer:
         analogue). Each batch is planned from the sink's committed
         watermark, so killing the process anywhere and rerunning
         resumes correctly."""
-        journal = self._read_journal()
-        # chain discovery: parquet footers (metadata-only, Iceberg-
-        # manifest analogue) when the layout allows, else the 2-column
-        # scan — the fixed per-run cost this removes is what dilutes
-        # wall-clock scaling efficiency at small core counts
-        chain = usable_chain(
-            receiver_lineage_from_footers(self.cfg.journal_path)
-            or receiver_lineage(journal)
-        )
+        journal, chain = discover_chain(self.spark, self.cfg)
         out = []
         # T6: invalid-position triage before the loop (the reference's
         # CPF7053 handling: fail, or reset-to-earliest with a logged
@@ -596,10 +557,9 @@ class JournalTailer:
                 raise
             n_ranges += 1
             # mor housekeeping: bound read amplification by folding
-            # deltas into a base — delta-count trigger preferred,
-            # batch cadence as fallback (maintenance commit — no
+            # deltas into a base (maintenance commit — no
             # fence/watermark movement, crash-safe)
-            if _mor_compact_due(self.cfg, self.target, n_ranges, out[-1]):
+            if _mor_compact_due(self.cfg, self.target, out[-1]):
                 out[-1]["compacted"] = not self.target.compact().get(
                     "skipped", False
                 )
@@ -687,10 +647,7 @@ class JournalTailer:
             out["state"] = "empty"
             return out
         try:
-            chain = usable_chain(
-                receiver_lineage_from_footers(self.cfg.journal_path)
-                or receiver_lineage(self._read_journal())
-            )
+            _, chain = discover_chain(self.spark, self.cfg)
             if not validate_position(
                 chain, Position(wm[0], wm[1], processed=True)
             ):
@@ -709,7 +666,7 @@ class JournalTailer:
         journal head vs the sink's applied per-partition watermarks."""
         from debezium_connector_ibmi_spark.operators.transactions import journal_lag
 
-        journal = self._read_journal()
+        journal = open_journal(self.spark, self.cfg)
         lineage_rows = self.target.lineage()
         if lineage_rows:
             applied = self.spark.createDataFrame(
@@ -789,25 +746,6 @@ def run_structured_stream(
             obs,
             F.max(F.struct(F.col("receiver_idx"), F.col("seq"))).alias("w"),
         )
-        # cow: same default persist+fill shape as the tailer (see the
-        # TOUCHED_BUCKETS_NARROW A/B note); the cache-fill action
-        # also fires the watermark Observation above (it sits below
-        # prepare_batch in the observed plan). The mor sink's single
-        # write action needs no discovery at all.
-        cache = (
-            getattr(target, "write_mode", "cow") == "cow"
-            and not TOUCHED_BUCKETS_NARROW
-        )
-        batch = prepare_batch(observed, cfg)
-        touched = None
-        if TOUCHED_BUCKETS_NARROW and (
-            getattr(target, "write_mode", "cow") == "cow"
-        ):
-            touched = _touched_buckets_narrow(df, cfg, target)
-        elif cache:
-            batch = batch.persist()
-            touched = _fill_cache_collect_touched(batch, target)
-
         def wm_provider():
             # bounded probe, never a blocking obs.get: a sink commit
             # path that skipped actions over the batch falls back to
@@ -831,20 +769,18 @@ def run_structured_stream(
         # mid-run would leave it ahead of unmerged entries and the
         # tailer would skip them. Stream restarts resume from the
         # Spark checkpoint, not the sink watermark.
-        merge_kwargs = {} if touched is None else {"touched": touched}
-        mstats = target.merge(
-            batch,
+        # the merge's cache-fill action (cow) also fires the watermark
+        # Observation above: it sits below prepare_batch in the plan
+        mstats = merge_batch(
+            observed,
+            cfg,
+            target,
             batch_id=epoch_id,
             watermark=wm_provider,
             writer_id=_stream_writer_id(),
-            **merge_kwargs,
         )
-        if cache:
-            batch.unpersist()
-        # mor housekeeping parity with run_to_head: delta-count
-        # trigger preferred, batch cadence as fallback (epoch ids are
-        # monotone, so the cadence holds across restarts too)
-        if _mor_compact_due(cfg, target, epoch_id + 1, mstats):
+        # mor housekeeping parity with run_to_head
+        if _mor_compact_due(cfg, target, mstats):
             target.compact()
 
     stream = read_journal_stream(

@@ -38,12 +38,13 @@ from debezium_connector_ibmi_spark.plans.range_planner import (
     Position,
     PositionRange,
     plan_next_range,
-    receiver_lineage,
-    receiver_lineage_from_footers,
-    usable_chain,
     validate_position,
 )
-from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
+from debezium_connector_ibmi_spark.streaming.engine import (
+    JournalTailer,
+    _mor_compact_due,
+    discover_chain,
+)
 
 
 class MultiTableTailer:
@@ -101,11 +102,7 @@ class MultiTableTailer:
         ONE shared range from the minimum per-table watermark, slices
         and persists it once, and fans the slice out to each table's
         own fenced merge (tables already past the range skip)."""
-        journal = next(iter(self.tailers.values()))._read_journal()
-        chain = usable_chain(
-            receiver_lineage_from_footers(self.cfg.journal_path)
-            or receiver_lineage(journal)
-        )
+        journal, chain = discover_chain(self.spark, self.cfg)
         out: list[dict] = []
         # T6 triage per table (mirrors JournalTailer.run_to_head): a
         # table whose committed watermark precedes the usable chain was
@@ -174,9 +171,6 @@ class MultiTableTailer:
                     sub = PositionRange(
                         start=Position(wm[0], wm[1], processed=True),
                         end=rng.end,
-                        # per-table slice of the planned range: the
-                        # plan's span bound still upper-bounds it
-                        est_entries=rng.est_entries,
                     )
                     batch_id = tailer.target.last_batch_id() + 1
                     results[table] = tailer.process_range(sliced, sub, batch_id)
@@ -192,12 +186,10 @@ class MultiTableTailer:
                 }
             )
             n_ranges += 1
-            # mor housekeeping parity with JournalTailer.run_to_head
-            if (
-                self.cfg.mor_compact_every > 0
-                and n_ranges % self.cfg.mor_compact_every == 0
-            ):
-                for tl in self.tailers.values():
-                    if getattr(tl.target, "write_mode", "cow") == "mor":
-                        tl.target.compact()
+            # mor housekeeping parity with JournalTailer.run_to_head,
+            # judged on each table's own merge stats
+            for table, stats in results.items():
+                tl = self.tailers[table]
+                if _mor_compact_due(tl.cfg, tl.target, stats):
+                    tl.target.compact()
         return out

@@ -50,7 +50,6 @@ def _cfg(journal_path, tmpdir, **kw):
         target_path=f"{tmpdir}/target",
         checkpoint_path=f"{tmpdir}/ckpt",
         num_buckets=8,
-        salt_buckets=4,
         merge_write_mode="mor",
         **kw,
     )
@@ -280,12 +279,12 @@ def test_cow_merge_consumes_pending_deltas(spark, tmpdir_path):
 
 
 def test_mor_auto_compaction_bounds_deltas(spark, journal_path, oracle, tmpdir_path):
-    """cfg.mor_compact_every folds deltas into a base every K merged
-    batches — pending deltas per bucket stay bounded by K and the
-    final state still matches the oracle."""
+    """cfg.mor_compact_max_deltas folds deltas into a base once any
+    bucket holds K pending deltas — pending deltas per bucket stay
+    bounded by K and the final state still matches the oracle."""
     cfg = replace(
         _cfg(journal_path, tmpdir_path, max_entries_per_batch=150),
-        mor_compact_every=3,
+        mor_compact_max_deltas=3,
     )
     out = JournalTailer(spark, cfg).run_to_head()
     n_batches = sum(1 for s in out if "events" in s)
@@ -409,16 +408,17 @@ def test_mor_random_batch_equivalence(spark, tmpdir_path, seed, delete_mode):
 
 
 def test_mor_stream_auto_compaction(spark, journal_path, oracle, tmpdir_path):
-    """Streaming parity for mor housekeeping: with mor_compact_every
-    set, epochs fold deltas on cadence — pending deltas stay bounded
-    and the final state still matches the oracle."""
+    """Streaming parity for mor housekeeping: with
+    mor_compact_max_deltas set, epochs fold deltas once a bucket
+    reaches the threshold — pending deltas stay bounded and the final
+    state still matches the oracle."""
     from debezium_connector_ibmi_spark.streaming.engine import (
         run_structured_stream,
     )
 
     cfg = replace(
         _cfg(journal_path, f"{tmpdir_path}/sc", max_entries_per_batch=200),
-        mor_compact_every=1,
+        mor_compact_max_deltas=1,
     )
     q = run_structured_stream(spark, cfg, available_now=True)
     q.awaitTermination(timeout=300)
@@ -426,7 +426,7 @@ def test_mor_stream_auto_compaction(spark, journal_path, oracle, tmpdir_path):
     c = t.last_commit()
     assert c["buckets"], "compaction wrote a base"
     pending = sum(len(v) for v in (c.get("deltas") or {}).values())
-    assert pending == 0, f"cadence=1 must leave no pending deltas: {pending}"
+    assert pending == 0, f"threshold=1 must leave no pending deltas: {pending}"
     _assert_matches_oracle(_state(spark, cfg), oracle)
 
 

@@ -339,56 +339,6 @@ def test_lineage_rides_merge_jobs(spark, tmpdir_path):
     )
 
 
-def test_touched_buckets_shapes_equivalent(spark, tmpdir_path):
-    """The cow sink's two touched-bucket discovery shapes — the
-    default persist + cache-fill collect_set Observation (round 5,
-    measured fastest/most stable in the round-7 A/B) and the
-    key-column-only narrow pre-pass (TOUCHED_BUCKETS_NARROW=True,
-    kept for the A/B) — produce IDENTICAL target state, watermark,
-    and lineage. The narrow run must also never persist the batch."""
-    from debezium_connector_ibmi_spark import streaming
-    from debezium_connector_ibmi_spark.streaming.engine import JournalTailer
-
-    jdir = f"{tmpdir_path}/j"
-    write_journal(spark, GEN, jdir, num_files=2)
-
-    def run(target_path, narrow):
-        orig = streaming.engine.TOUCHED_BUCKETS_NARROW
-        streaming.engine.TOUCHED_BUCKETS_NARROW = narrow
-        cfg = EngineConfig(
-            journal_path=jdir,
-            target_path=target_path,
-            num_buckets=4,
-            max_entries_per_batch=100,
-        )
-        tailer = JournalTailer(spark, cfg)
-        try:
-            out = tailer.run_to_head()
-        finally:
-            streaming.engine.TOUCHED_BUCKETS_NARROW = orig
-        rows = sorted(map(tuple, tailer.target.read().collect()))
-        return (
-            out, rows, tailer.target.watermark(), tailer.target.lineage(),
-        )
-
-    o1, r1, w1, l1 = run(f"{tmpdir_path}/t_fill", False)
-    o2, r2, w2, l2 = run(f"{tmpdir_path}/t_narrow", True)
-
-    n_batches = sum(1 for s in o1 if "events" in s)
-    assert n_batches >= 2
-    assert r1 == r2
-    assert w1 == w2
-    key = lambda rows: sorted(  # noqa: E731
-        (r["receiver_idx"], r["seq"], r["events_applied"]) for r in rows
-    )
-    assert key(l1) == key(l2)
-    # both modes computed real touched sets (buckets recorded in the
-    # merge commits)
-    assert all(
-        s.get("buckets_touched") for s in o2 if "events" in s
-    )
-
-
 def test_semantic_dedup_broadcasts_cell_mapping(spark):
     """emb_semantic_dedup's code->cell mapping (bounded metadata,
     <= 2^16 rows) must come back as a BROADCAST join — never a

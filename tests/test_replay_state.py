@@ -41,9 +41,8 @@ def _assert_state_equal(engine: dict, oracle: dict, check_deleted=False):
         assert e["warc_ts"] == o["warc_ts"], url
 
 
-@pytest.mark.parametrize("mode", ["fused", "salted"])
-def test_full_replay_matches_oracle_drop_mode(spark, journal_df, mode):
-    cfg = EngineConfig(delete_mode="drop", compaction_mode=mode)
+def test_full_replay_matches_oracle_drop_mode(spark, journal_df):
+    cfg = EngineConfig(delete_mode="drop")
     state = current_state(journal_df, cfg)
     engine = state_df_to_dict(state)
     oracle = naive_replay([r.asDict() for r in journal_df.collect()], delete_mode="drop")

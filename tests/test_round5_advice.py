@@ -182,7 +182,11 @@ def test_registry_rotation_freshness_invariant():
         all_queries,
     )
 
-    prev = json.load(open("/root/repo/CORRECTNESS_r06.json"))
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "CORRECTNESS_r06.json")) as fh:
+        prev = json.load(fh)
     green_prev = {
         k
         for k, v in prev.items()

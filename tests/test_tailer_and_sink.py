@@ -41,7 +41,6 @@ def _cfg(journal_path, tmpdir, **kw):
         target_path=f"{tmpdir}/target",
         checkpoint_path=f"{tmpdir}/ckpt",
         num_buckets=8,
-        salt_buckets=4,
         **kw,
     )
 
@@ -173,3 +172,75 @@ def test_rewrite_mode_keeps_tombstones(spark, journal_path, tmpdir_path):
     got = {r["url"]: r["__deleted"] for r in df.collect()}
     want = {k: v["__deleted"] for k, v in oracle.items()}
     assert got == want
+
+
+def test_receiver_published_during_discovery_is_not_skipped(
+    spark, tmpdir_path, monkeypatch
+):
+    """A receiver that lands while a pass discovers the chain must not
+    be planned unless the pass's scan can see it. The chain is read
+    from the footers BEFORE the scan lists its files, so a receiver
+    published in between is either in both or planned by neither —
+    the watermark never passes entries the merge did not read."""
+    import os
+    import shutil
+
+    from debezium_connector_ibmi_spark.streaming import engine
+
+    staging, jdir = f"{tmpdir_path}/staging", f"{tmpdir_path}/journal"
+    gen = JournalGenConfig(n_urls=50, n_ops=900, txn_size=30, receiver_rotation=120)
+    write_journal(spark, gen, staging, num_files=4)
+    receivers = sorted(
+        (d for d in os.listdir(staging) if d.startswith("receiver_idx=")),
+        key=lambda d: int(d.split("=", 1)[1]),
+    )
+    assert len(receivers) >= 3
+    os.makedirs(jdir)
+    for d in receivers[:-1]:
+        shutil.move(f"{staging}/{d}", f"{jdir}/{d}")
+
+    footers = engine.receiver_lineage_from_footers
+
+    def publish_then_discover(path):
+        last = f"{staging}/{receivers[-1]}"
+        if os.path.exists(last):
+            shutil.move(last, f"{jdir}/{receivers[-1]}")
+        return footers(path)
+
+    monkeypatch.setattr(
+        engine, "receiver_lineage_from_footers", publish_then_discover
+    )
+    cfg = _cfg(jdir, tmpdir_path)
+    tailer = JournalTailer(spark, cfg)
+    tailer.run_to_head()
+
+    wm = tailer.target.watermark()
+    rows = [
+        r.asDict()
+        for r in spark.read.parquet(jdir).collect()
+        if (r["receiver_idx"], r["seq"]) <= tuple(wm)
+    ]
+    _assert_matches_oracle(_final_state(spark, cfg), naive_replay(rows))
+
+
+def test_merge_failure_releases_persisted_batch(spark, journal_path, tmpdir_path):
+    """A copy-on-write batch is persisted for touched-bucket discovery;
+    a merge that raises must still release it."""
+    from debezium_connector_ibmi_spark.plans.range_planner import (
+        Position,
+        PositionRange,
+    )
+    from debezium_connector_ibmi_spark.sources.journal_source import read_journal
+
+    class FailingTarget(KeyBucketedTarget):
+        def merge(self, batch, **kw):
+            raise RuntimeError("merge failed")
+
+    cfg = _cfg(journal_path, tmpdir_path)
+    target = FailingTarget(spark, cfg.target_path, num_buckets=cfg.num_buckets)
+    tailer = JournalTailer(spark, cfg, target=target)
+    rng = PositionRange(start=Position(-1, -1), end=Position(0, 10**9))
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="merge failed"):
+        tailer.process_range(read_journal(spark, journal_path), rng, batch_id=0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

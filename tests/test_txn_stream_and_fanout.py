@@ -182,6 +182,41 @@ def test_multi_table_fanout(spark, tmpdir_path):
     assert MultiTableTailer(spark, cfg).run_to_head() == []
 
 
+def test_fanout_mor_compacts_on_delta_count(spark, tmpdir_path):
+    """merge-on-read housekeeping in the fan-out: each table's own
+    merge stats drive ``mor_compact_max_deltas``, so with a threshold
+    of 1 every table compacts after every batch and no deltas stay
+    pending."""
+    jdir = f"{tmpdir_path}/j"
+    _two_table_journal(spark, GEN).write.mode("overwrite").partitionBy(
+        "receiver_idx"
+    ).parquet(jdir)
+    cfg = EngineConfig(
+        journal_path=jdir,
+        target_path=f"{tmpdir_path}/root",
+        table_include_list=("PAGES", "LINKS"),
+        num_buckets=4,
+        max_entries_per_batch=400,
+        merge_write_mode="mor",
+        mor_compact_max_deltas=1,
+    )
+    mt = MultiTableTailer(spark, cfg)
+    out = mt.run_to_head()
+    assert len(out) > 1  # several shared planned ranges
+    rows = [r.asDict() for r in spark.read.parquet(jdir).collect()]
+    for table in ("PAGES", "LINKS"):
+        c = mt.target(table).last_commit()
+        pending = sum(len(v) for v in (c.get("deltas") or {}).values())
+        assert pending == 0, f"{table}: {pending} pending deltas"
+        oracle = naive_replay(rows, include_tables=(table,))
+        eng = state_df_to_dict(
+            mt.target(table).read().drop("bucket", "receiver_idx", "seq")
+        )
+        assert set(eng) == set(oracle), table
+        for url, o in oracle.items():
+            assert eng[url]["html"] == o["html"], (table, url)
+
+
 def test_fanout_table_ahead_skips(spark, tmpdir_path):
     """A table already ahead (e.g. previously tailed solo) skips the
     shared ranges below its own watermark instead of re-merging."""
